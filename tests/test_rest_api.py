@@ -79,6 +79,26 @@ def test_fetch_products_over_real_http(spark):
         server.server_close()
 
 
+def test_fetch_products_pages_never_exceed_page_size(spark):
+    """An API that caps its page size rejects longer requests: every
+    page must carry at most ``page_size`` UPCs, on every partition."""
+    page_size = 10
+
+    def capped(url, headers=None):
+        n = len(urllib.parse.parse_qs(urllib.parse.urlparse(url).query)["upcs"][0].split(","))
+        if n > page_size:
+            raise ValueError(f"page of {n} UPCs exceeds the cap of {page_size}")
+        return fake_transport(url, headers)
+
+    upcs = [str(100000000000 + i) for i in range(57)]
+    worklist = spark.createDataFrame(
+        [(u,) for u in upcs] + [(None,)], "upc string"
+    ).repartition(3)
+    assert worklist.rdd.getNumPartitions() == 3
+    got = fetch_products(worklist, page_size=page_size, transport=capped)
+    assert sorted(r["upc"] for r in got.collect()) == upcs
+
+
 def test_token_bucket_rate_and_burst():
     from upc_sku_data_loader_spark.sources.rest_api import TokenBucket
 

@@ -9,21 +9,27 @@ deterministic fake transport the WHOLE flow is a pure function of the
 worklist, so the registry exposes it as a hash-checked query: the oracle
 reproduces normalize + delta + payload + upsert in plain SQL.
 
-Scale: each stage is shuffle-bounded — normalize is map-only, the
-anti-join shuffles on the 13-digit key (broadcastable when the existing-
-key set is small), fetch parallelism = page count, the upsert fan-in is
-capped by ``max_connections``.  Nothing collects to the driver except
-the final audit counts.
+Scale: the whole load is ONE Spark action (the upsert's collect of
+per-partition row counts).  Normalize is map-only, dropDuplicates and
+the anti-join shuffle on the 13-digit key (the anti-join broadcasts when
+the existing-key set is small), the fetch runs over the delta's own
+partitions, and the upsert fan-in is capped by ``max_connections``.  The
+audit counts ride that action as ``Observation``s (the etl5 pattern), so
+nothing is persisted and no input is scanned twice; only the counts and
+one row count per writer partition reach the driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.upc import upc_normalize
 from ..sources.db import ConnFactory, db_sink_upsert
 from ..sources.rest_api import Transport, fake_transport, fetch_products
+
+_AQE_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+_AQE_EMPTY_RULE = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
 
 
 def load_upcs(
@@ -40,17 +46,20 @@ def load_upcs(
     max_connections: int = 4,
 ) -> dict[str, int]:
     """Run the full load; returns audit counts (the reference's load
-    accounting — SURVEY §3.2 step 5)."""
-    normalized = worklist.select(
-        upc_normalize(F.col(upc_col), width=13).alias("upc")
-    ).filter(F.length("upc") == 13)
-
-    deduped = normalized.dropDuplicates(["upc"])  # overlapping pages/batches
-    # cache: the delta worklist feeds both the audit count and the fetch;
-    # it is keys-only, so even a 100 TB load's delta fits executor storage
+    accounting — SURVEY §3.2 step 5), observed during the upsert's own
+    action: raw worklist rows, distinct valid keys, delta keys."""
+    seen, distinct, fresh = Observation(), Observation(), Observation()
+    rows = F.count(F.lit(1)).alias("rows")
+    normalized = (
+        worklist.observe(seen, rows)
+        .select(upc_normalize(F.col(upc_col), width=13).alias("upc"))
+        .filter(F.length("upc") == 13)
+    )
+    # overlapping pages/batches
+    deduped = normalized.dropDuplicates(["upc"]).observe(distinct, rows)
     delta = deduped.join(
         existing_keys.select(F.col("upc").alias("upc")), on="upc", how="left_anti"
-    ).persist()
+    ).observe(fresh, rows)
 
     products = fetch_products(
         delta,
@@ -60,21 +69,28 @@ def load_upcs(
         transport=transport,
         auth_token=auth_token,
     )
-
-    n_worklist = worklist.count()
-    n_delta = delta.count()
-    db_sink_upsert(
-        products,
-        conn_factory=conn_factory,
-        table=table,
-        key_cols=["upc"],
-        dialect=dialect,
-        max_connections=max_connections,
-    )
-    audit = {
-        "worklist_rows": n_worklist,
+    # AQE swaps a stage that ran empty (a worklist with no valid key) for
+    # an empty relation, and the observations inside the stage go with it
+    conf = worklist.sparkSession.conf
+    old = conf.get(_AQE_EXCLUDED_RULES, None)
+    conf.set(_AQE_EXCLUDED_RULES, f"{old},{_AQE_EMPTY_RULE}" if old else _AQE_EMPTY_RULE)
+    try:
+        db_sink_upsert(
+            products,
+            conn_factory=conn_factory,
+            table=table,
+            key_cols=["upc"],
+            dialect=dialect,
+            max_connections=max_connections,
+        )
+    finally:
+        if old is None:
+            conf.unset(_AQE_EXCLUDED_RULES)
+        else:
+            conf.set(_AQE_EXCLUDED_RULES, old)
+    n_delta = fresh.get["rows"]
+    return {
+        "worklist_rows": seen.get["rows"],
         "delta_rows": n_delta,
-        "skipped_existing": deduped.count() - n_delta,
+        "skipped_existing": distinct.get["rows"] - n_delta,
     }
-    delta.unpersist()
-    return audit

@@ -1008,10 +1008,10 @@ def _k18_build(
                 text.encode("utf-32-le", "surrogatepass"), dtype=np.uint32
             ).astype(np.uint64)
             if len(text) < n:  # substr(1, n) of a short text is the text
-                h = SEED
+                h = np.full(1, SEED, dtype=np.uint64)  # array math wraps silently
                 for c in cp.tolist():
                     h = h * K + np.uint64(c)
-                return np.asarray([_mix(h)], dtype=np.uint64).view(np.int64)
+                return _mix(h).view(np.int64)
             m = len(cp) - n + 1
             hs = np.full(m, SEED, dtype=np.uint64)
             for j in range(n):

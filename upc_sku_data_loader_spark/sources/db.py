@@ -3,7 +3,7 @@ empty tree §0.1; [D] BASELINE.json:7 "DataFrame write to JDBC sink").
 
 The reference's load step is "insert rows into MySQL, upsert by UPC".
 Spark has no MERGE mode on ``df.write.jdbc``, so the idempotent upsert
-is a ``foreachPartition`` writer executing batched
+is a ``mapInArrow`` writer executing batched
 ``INSERT … ON CONFLICT/ON DUPLICATE KEY UPDATE`` through any DB-API
 driver.  This machine has no MySQL server and no JDBC jar (SURVEY §7
 Phase 4 risk), so:
@@ -13,9 +13,15 @@ Phase 4 risk), so:
 - the **jdbc_* wrappers** ship the ``spark.read/write.jdbc`` call
   shape for real clusters but cannot run here (flagged, not hidden).
 
-Scale notes: one connection per partition (NOT per row); batches of
-``batch_size`` via ``executemany``; idempotent by primary key so Spark
-task retries are safe (at-least-once execution → exactly-once state).
+The writer is a Dataset action: each partition yields its row count and
+one ``collect()`` runs them, so ``Observation`` metrics on the written
+DataFrame are reported when the write completes (``rdd.foreachPartition``
+reports none) — the ETL audit (pipelines/etl.py) rides the write.
+
+Scale notes: one connection per partition (NOT per row); Arrow columns
+become DB-API tuples in batches of ``batch_size`` via ``executemany``;
+idempotent by primary key so Spark task retries are safe (at-least-once
+execution → exactly-once state).
 Partition count bounds DB connection fan-in — ``coalesce`` before
 writing to stay under the server's connection budget.
 """
@@ -25,7 +31,9 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from typing import Any
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow as pa
+
+from pyspark.sql import DataFrame, SparkSession
 
 #: connection_factory() -> DB-API connection (e.g. functools.partial(sqlite3.connect, path))
 ConnFactory = Callable[[], Any]
@@ -61,6 +69,15 @@ def upsert_sql(dialect: str, table: str, cols: list[str], key_cols: list[str]) -
     raise ValueError(f"unknown dialect {dialect!r}")
 
 
+def _py_values(col: pa.Array) -> list:
+    """An Arrow column as the Python values ``Row`` fields carry: a
+    zone-aware timestamp becomes a naive local datetime, as Spark's
+    ``TimestampType.fromInternal`` makes it; every other type converts as is."""
+    if pa.types.is_timestamp(col.type) and col.type.tz is not None:
+        return [v and v.astimezone().replace(tzinfo=None) for v in col.to_pylist()]
+    return col.to_pylist()
+
+
 def db_sink_upsert(
     df: DataFrame,
     conn_factory: ConnFactory,
@@ -69,8 +86,9 @@ def db_sink_upsert(
     dialect: str = "sqlite",
     batch_size: int = 1000,
     max_connections: int = 8,
-) -> None:
-    """A7: idempotent upsert of ``df`` keyed by ``key_cols``.
+) -> int:
+    """A7: idempotent upsert of ``df`` keyed by ``key_cols``; returns the
+    number of rows written.
 
     Safe under Spark task retries (re-running a partition rewrites the
     same final state).  ``max_connections`` caps DB fan-in.
@@ -78,24 +96,23 @@ def db_sink_upsert(
     cols = df.columns
     sql = upsert_sql(dialect, table, cols, key_cols)
 
-    def write_partition(rows: Iterator[Row]) -> None:
-        batch: list[tuple] = []
+    def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        written = 0
         conn = conn_factory()
         try:
             cur = conn.cursor()
-            for row in rows:
-                batch.append(tuple(row[c] for c in cols))
-                if len(batch) >= batch_size:
-                    cur.executemany(sql, batch)
+            for rb in batches:
+                rows = list(zip(*(_py_values(rb.column(c)) for c in cols)))
+                for i in range(0, len(rows), batch_size):
+                    cur.executemany(sql, rows[i : i + batch_size])
                     conn.commit()
-                    batch.clear()
-            if batch:
-                cur.executemany(sql, batch)
-                conn.commit()
+                written += len(rows)
         finally:
             conn.close()
+        yield pa.RecordBatch.from_pydict({"rows": [written]})
 
-    df.coalesce(max_connections).foreachPartition(write_partition)
+    counts = df.coalesce(max_connections).mapInArrow(write_partition, "rows long")
+    return sum(r["rows"] for r in counts.collect())
 
 
 def db_source(

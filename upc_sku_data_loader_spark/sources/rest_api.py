@@ -3,14 +3,14 @@
 auth + retry/backoff; reference file:line n/a — empty tree §0.1).
 
 Spark-native shape:
-  1. the UPC worklist is a DataFrame; assign page ids with
-     ``pmod(xxhash64(upc), n_pages)`` — a deterministic hash, so page
-     assignment shuffles instead of globally sorting (a window
-     row_number over the whole worklist would funnel 100 TB through
-     one partition);
-  2. ``mapInPandas`` fans the pages out across executor partitions —
+  1. the UPC worklist is a DataFrame; pages are cut where its rows
+     already are — each Arrow batch of each partition is sorted and
+     split into pages of at most ``page_size`` UPCs, so paging needs no
+     count, no shuffle and no global sort (a window row_number over the
+     whole worklist would funnel 100 TB through one partition);
+  2. ``mapInPandas`` runs the fetch on the worklist's own partitions —
      each Python worker fetches its pages through a pluggable
-     ``transport`` and yields parsed records as Arrow batches;
+     ``transport`` and yields one frame of parsed records per batch;
   3. the payload schema is pinned at the edge (SURVEY §1.1).
 
 Transport is injectable:
@@ -21,8 +21,8 @@ Transport is injectable:
   payload is a pure function of the UPC, so the whole pipeline is
   hash-checkable against a SQL oracle.
 
-Scale notes: pages-per-partition controls fetch parallelism
-(``repartition(n_workers)`` before the map); the auth token is fetched
+Scale notes: the worklist's partition count is the fetch parallelism
+(``repartition(n_workers)`` first to widen it); the auth token is fetched
 once driver-side and shipped in the closure (refresh-on-401 happens
 inside the worker); per-partition rate limiting via a token bucket in
 the transport keeps a 1000-executor fleet under the API's global
@@ -32,7 +32,6 @@ budget.
 from __future__ import annotations
 
 import json
-import math
 import time
 import urllib.error
 import urllib.parse
@@ -154,19 +153,14 @@ def fetch_products(
     """worklist[upc] → typed product DataFrame via paginated fetch.
 
     Returns columns: upc, sku, brand, price, in_stock (PRODUCT_SCHEMA).
-    One count() action sizes the page space; page membership is a pure
-    hash of the UPC so the grouping is a normal shuffle (no global sort).
+    Lazy and shuffle-free: the fetch runs over the worklist's own
+    partitions; each input batch's non-null UPCs are sorted and sent in
+    pages of at most ``page_size`` (an API that caps its page size never
+    sees a longer request), and one frame of records comes back per batch.
     ``rate_limit_per_s`` throttles each fetch partition with a token
     bucket (global budget ≈ partitions × rate).
     """
-    n = worklist.count()
-    n_pages = max(1, math.ceil(n / page_size))
-    pages = (
-        worklist.select(F.col(upc_col).alias("upc"))
-        .withColumn("page_id", F.pmod(F.xxhash64("upc"), F.lit(n_pages)))
-        .groupBy("page_id")
-        .agg(F.sort_array(F.collect_list("upc")).alias("upcs"))
-    )
+    cols = ["upc", "sku", "brand", "price", "in_stock"]
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         headers = {"Authorization": f"Bearer {auth_token}"} if auth_token else {}
@@ -174,15 +168,17 @@ def fetch_products(
             TokenBucket(rate_limit_per_s, rate_burst) if rate_limit_per_s else None
         )
         for pdf in batches:
-            for upcs in pdf["upcs"]:
+            upcs = sorted(pdf["upc"].dropna())
+            records = []
+            for i in range(0, len(upcs), page_size):
                 if bucket is not None:
                     bucket.acquire()
-                url = f"{base_url}?upcs={','.join(upcs)}"
+                url = f"{base_url}?upcs={','.join(upcs[i : i + page_size])}"
                 body = transport(url, headers)
-                records = [json.loads(line) for line in body.splitlines() if line]
-                if records:
-                    yield pd.DataFrame.from_records(records)[
-                        ["upc", "sku", "brand", "price", "in_stock"]
-                    ]
+                records.extend(json.loads(line) for line in body.splitlines() if line)
+            if records:
+                yield pd.DataFrame.from_records(records)[cols]
 
-    return pages.mapInPandas(fetch, PRODUCT_SCHEMA)
+    return worklist.select(F.col(upc_col).alias("upc")).mapInPandas(
+        fetch, PRODUCT_SCHEMA
+    )
