@@ -24,8 +24,9 @@ from upc_sku_data_loader_spark.functions.vectors import finite_vec, finite_vec_s
 from upc_sku_data_loader_spark.operators.asof import asof_join
 from upc_sku_data_loader_spark.operators.dedup import (
     lsh_candidate_pairs,
-    minhash_signatures,
-    verify_jaccard,
+    minhash_signatures_from_base,
+    shingle_base,
+    verify_jaccard_from_base,
 )
 
 NAN, INF = float("nan"), float("inf")
@@ -96,15 +97,19 @@ def test_minhash_pipeline_excludes_null_text_docs(spark):
             ]
         ),
     )
-    sigs = minhash_signatures(docs, n_hashes=8, shingle_k=3)
+    caches = []
+    base = shingle_base(docs, caches, shingle_k=3)
+    sigs = minhash_signatures_from_base(base, n_hashes=8)
     assert sorted(r["doc_id"] for r in sigs.collect()) == [1, 2, 4]
-    pairs = verify_jaccard(
+    pairs = verify_jaccard_from_base(
         lsh_candidate_pairs(sigs, n_bands=2, rows_per_band=4),
-        docs,
+        base,
         threshold=0.5,
     ).collect()
     # the NULL-text doc pairs with nothing; the real dup pair survives
     assert {(r["a"], r["b"]) for r in pairs} == {(1, 2)}
+    for df in caches:
+        df.unpersist()
 
 
 def test_asof_null_ts_right_rows_never_match(spark):

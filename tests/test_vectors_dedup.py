@@ -10,8 +10,9 @@ from pyspark.sql import functions as F
 from upc_sku_data_loader_spark.functions.vectors import cosine, dot, l2_norm
 from upc_sku_data_loader_spark.operators.dedup import (
     lsh_candidate_pairs,
-    minhash_signatures,
-    verify_jaccard,
+    minhash_signatures_from_base,
+    shingle_base,
+    verify_jaccard_from_base,
 )
 
 
@@ -62,12 +63,16 @@ def test_minhash_lsh_finds_near_duplicates(spark):
         [(1, " ".join(base)), (2, " ".join(edited)), (3, " ".join(other))],
         "doc_id bigint, text string",
     )
-    sigs = minhash_signatures(docs, n_hashes=32)
+    caches = []
+    base = shingle_base(docs, caches)
+    sigs = minhash_signatures_from_base(base, n_hashes=32)
     cands = lsh_candidate_pairs(sigs, n_bands=8, rows_per_band=4)
-    verified = verify_jaccard(cands, docs, threshold=0.8)
+    verified = verify_jaccard_from_base(cands, base, threshold=0.8)
     pairs = {(r["a"], r["b"]) for r in verified.collect()}
     assert (1, 2) in pairs
     assert all(3 not in p for p in pairs)
+    for df in caches:
+        df.unpersist()
 
 
 def test_lsh_bucket_cap_defuses_degenerate_band(spark):
@@ -83,7 +88,10 @@ def test_lsh_bucket_cap_defuses_degenerate_band(spark):
         (101, "the quick brown fox jumps over the lazy dog today"),
     ]
     docs = spark.createDataFrame(boiler + near, "doc_id long, text string")
-    sigs = minhash_signatures(docs, n_hashes=32, shingle_k=3)
+    caches = []
+    sigs = minhash_signatures_from_base(
+        shingle_base(docs, caches, shingle_k=3), n_hashes=32
+    )
 
     uncapped = lsh_candidate_pairs(sigs, max_bucket_size=None)
     assert uncapped.count() >= 60 * 59 // 2  # the quadratic blowup is real
@@ -93,6 +101,8 @@ def test_lsh_bucket_cap_defuses_degenerate_band(spark):
     assert (100, 101) in pairs          # genuine pair survives
     assert all(a >= 100 for a, _ in pairs)  # degenerate bucket dropped
     assert len(pairs) == 1
+    for df in caches:
+        df.unpersist()
 
 
 def test_dedup_clusters_transitive_closure(spark):
@@ -256,13 +266,13 @@ def test_k18_kernel_and_sql_fallback_agree(spark, sf_dir, monkeypatch):
     """The broadcast-CSR kernel and the array_intersect fallback must be
     value-identical (jaccard math stays in SQL on both paths)."""
     from upc_sku_data_loader_spark import plans  # noqa: F401
-    from upc_sku_data_loader_spark.plans import llm
+    from upc_sku_data_loader_spark.operators import dedup as D
     from upc_sku_data_loader_spark.registry import QUERIES
 
     kernel = sorted(
         tuple(r) for r in QUERIES["k18_ngram_jaccard"](spark, sf_dir).collect()
     )
-    monkeypatch.setattr(llm, "_K18_KERNEL_MAX_REPS", 0)
+    monkeypatch.setattr(D, "_CSR_KERNEL_MAX_ROWS", 0)
     fallback = sorted(
         tuple(r) for r in QUERIES["k18_ngram_jaccard"](spark, sf_dir).collect()
     )
@@ -283,7 +293,7 @@ def test_k18_expansion_reapplies_directional_length_filter(spark, tmp_path, monk
     every candidate pair has jaccard exactly 1.0 and only the length
     filter decides membership."""
     from upc_sku_data_loader_spark import plans  # noqa: F401
-    from upc_sku_data_loader_spark.plans import llm
+    from upc_sku_data_loader_spark.operators import dedup as D
     from upc_sku_data_loader_spark.registry import QUERIES
 
     rows = [
@@ -303,8 +313,8 @@ def test_k18_expansion_reapplies_directional_length_filter(spark, tmp_path, monk
     want = _k18_brute_force([(i, s, len(s)) for i, s in rows])
     assert (2, 4) in want and (5, 6) in want  # miss side must be found
     assert (1, 2) not in want and (6, 7) not in want  # ghost side must not
-    for max_reps in (llm._K18_KERNEL_MAX_REPS, 0):  # kernel, then fallback
-        monkeypatch.setattr(llm, "_K18_KERNEL_MAX_REPS", max_reps)
+    for max_rows in (D._CSR_KERNEL_MAX_ROWS, 0):  # kernel, then fallback
+        monkeypatch.setattr(D, "_CSR_KERNEL_MAX_ROWS", max_rows)
         got = {
             (r["a"], r["b"]): r["jaccard"]
             for r in QUERIES["k18_ngram_jaccard"](spark, str(tmp_path)).collect()
@@ -403,10 +413,7 @@ def test_prefix_candidates_guarantee_boundary_recall(spark):
     two docs below share 4 of their 8 distinct 3-shingles -> J = 0.5
     with shingle sets engineered to defeat any particular banding."""
     from upc_sku_data_loader_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        prefix_candidates,
-        verify_jaccard,
+        prefix_candidates_from_base,
     )
 
     # the seed-23 corpus pair, verbatim (J = 0.5 on 3-token shingles)
@@ -417,9 +424,37 @@ def test_prefix_candidates_guarantee_boundary_recall(spark):
         ],
         "doc_id long, text string",
     )
-    sigs = minhash_signatures(docs, n_hashes=32, shingle_k=3)
+    caches = []
+    base = shingle_base(docs, caches, shingle_k=3)
+    sigs = minhash_signatures_from_base(base, n_hashes=32)
     cands = lsh_candidate_pairs(
         sigs, n_bands=8, rows_per_band=4, max_bucket_size=None
-    ).unionByName(prefix_candidates(docs, shingle_k=3, threshold=0.5)).distinct()
-    got = verify_jaccard(cands, docs, shingle_k=3, threshold=0.5).collect()
+    ).unionByName(prefix_candidates_from_base(base, threshold=0.5)).distinct()
+    got = verify_jaccard_from_base(cands, base, threshold=0.5).collect()
     assert [(r["a"], r["b"], r["jaccard"]) for r in got] == [(1, 2, 0.5)]
+    for df in caches:
+        df.unpersist()
+
+
+def test_near_dup_verify_kernel_and_fallback_agree(spark, sf_dir, monkeypatch):
+    """The verify prefilter's broadcast-CSR kernel path and its
+    above-gate fallback (distinct + exact verify over every candidate)
+    must emit identical rows for k2 and k73 (the k18 gate-pinning
+    pattern: force the fallback by zeroing the shared CSR row cap)."""
+    from upc_sku_data_loader_spark import plans  # noqa: F401
+    from upc_sku_data_loader_spark.operators import dedup as D
+    from upc_sku_data_loader_spark.registry import QUERIES
+
+    def no_kernel(*args, **kwargs):
+        raise AssertionError("the CSR kernel ran above its gate")
+
+    for name in ("k2_dedup_near_minhash", "k73_incremental_dedup"):
+        kernel = sorted(tuple(r) for r in QUERIES[name](spark, sf_dir).collect())
+        with monkeypatch.context() as m:
+            m.setattr(D, "_CSR_KERNEL_MAX_ROWS", 0)
+            m.setattr(D, "_pair_intersect_counts", no_kernel)
+            fallback = sorted(
+                tuple(r) for r in QUERIES[name](spark, sf_dir).collect()
+            )
+        assert kernel == fallback, name
+        assert kernel, name  # non-vacuous at sf0.001

@@ -2,18 +2,20 @@
 K2/K14 [X]; cf. Broder's resemblance/minwise papers — public knowledge).
 
 Pipeline (all DataFrame ops; the shuffle IS the LSH bucketing):
-  tokenize → k-token shingles → n_hashes seeded xxhash64 minima (one
-  explode + groupBy-min: codegen'd, linear) → band keys → self-join on
-  band key (docs colliding in ≥1 band = candidates) → exact shingle-set
-  Jaccard verify.
+  one cached tokenize → k-token shingles → per-shingle xxhash64 pass
+  (shingle_base) → n_hashes seeded minima over the pre-hashes → band
+  keys → groupBy band key (docs colliding in ≥1 band = candidates) ∪
+  prefix-filter candidates (exact recall) → CSR hash-overlap prefilter
+  (size-gated driver kernel) → exact shingle-set Jaccard verify.
 
 Scale notes:
-- Everything is one explode + two keyed shuffles (doc_id, then band
-  key); no crossJoin ever materializes.
+- Every stage is a keyed shuffle (or the size-gated broadcast) over
+  one cached scan; no crossJoin ever materializes.
 - Band-key skew (a degenerate bucket with B docs → B² candidate pairs)
   is the real 100 TB risk: ``lsh_candidate_pairs(max_bucket_size=...)``
-  drops degenerate buckets before the self-join (on by default); AQE
-  skew-split handles moderate cases below the cap.
+  drops degenerate buckets before pair emission (off by default — the
+  k2 contract is exact all-pairs); AQE skew-split handles moderate
+  cases.
 - xxhash64 is Spark-JVM-specific → the LSH stage is rows-only for the
   oracle; the *verify* stage (exact Jaccard) and the recall property
   (vs exact all-pairs) are tested in pytest instead.
@@ -21,7 +23,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
 import weakref
 
 from pyspark.sql import Column, DataFrame, Window
@@ -64,18 +65,18 @@ def shingle_base(
     per-element 8-byte pre-hash.
 
     Before r11 the pipeline tokenized the corpus THREE times per query
-    (minhash_signatures, prefix_candidates, verify_jaccard each
-    re-scanned + re-shingled), and k73's exact-hash branch re-scanned
-    the raw text twice more — guide §2.4/§5: the shingle pass is the
-    dominant map, so one cached pass beats n recomputed ones as long as
-    re-execution costs more than materialization (the r10 persist
-    rule; A/B numbers in OPTIMIZATION_r11.md).  The InMemoryRelation is
-    also the barrier that keeps ``hs`` evaluated once — the same
-    CollapseProject trap minhash_signatures' two-step projection
-    guards against.
+    (the minhash, prefix and verify stages each re-scanned +
+    re-shingled), and k73's exact-hash branch re-scanned the raw text
+    twice more — guide §2.4/§5: the shingle pass is the dominant map,
+    so one cached pass beats n recomputed ones as long as re-execution
+    costs more than materialization (the r10 persist rule; A/B numbers
+    in OPTIMIZATION_r11.md).
 
     NULL-text docs are filtered ONCE here (the shared convention: they
-    join no candidate pairs and carry no signature).  ``extra`` lets a
+    join no candidate pairs and carry no signature; --nulls sweep).
+    Without the filter ``shingles(split(NULL))`` silently collapses to
+    ``[""]`` (concat_ws skips NULL inputs), giving a contentless doc a
+    REAL signature that collides with every empty doc.  ``extra`` lets a
     caller ride additional per-doc columns on the same scan (k73's
     md5 exact-dup key) instead of paying another pass.
 
@@ -139,9 +140,10 @@ def verified_near_dup_pairs(
     the candidate stream is consumed exactly once by the verify, whose
     kernel path dedups consecutive pairs after its own (a)-keyed
     repartition+sort — so the union skips both the 309k-row distinct
-    Exchange and a materialization barrier; prefix_candidates' internal
-    distinct is skipped for the same reason.  The non-kernel fallback
-    inside verify_jaccard_from_base applies ``.distinct()`` itself, so
+    Exchange and a materialization barrier;
+    prefix_candidates_from_base's trailing distinct is skipped for the
+    same reason.  The non-kernel fallback inside
+    verify_jaccard_from_base applies ``.distinct()`` itself, so
     above the kernel gate the pair multiset is deduplicated exactly as
     before (A/Bs in OPTIMIZATION_r11.md)."""
     if base is None:
@@ -194,38 +196,25 @@ def shingles(toks: Column, k: int = 3) -> Column:
     ).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 32,
-    shingle_k: int = 3,
+def minhash_signatures_from_base(
+    base: DataFrame, n_hashes: int = 32
 ) -> DataFrame:
-    """One row per doc: ``mh`` = array<long> of n_hashes min-hash values.
+    """One row per doc of a :func:`shingle_base` relation: ``mh`` =
+    array<long> of n_hashes min-hash values.
 
-    Shape (r10, measured at sf0.1 — tools/op_bench methodology): the
-    shingle array is hashed ONCE per element to a long in its own
-    projection step, and each of the n_hashes minima is then a plain
-    ``array_min(transform(hs, h -> xxhash64(i, h)))`` over those longs.
-    Per shingle that is 1 string hash + n_hashes fixed-8-byte long
-    hashes instead of n_hashes string hashes.  Variants measured and
-    rejected:
+    Shape (r10, measured at sf0.1 — tools/op_bench methodology): each
+    shingle is string-hashed ONCE (the base's cached ``hs``), and each
+    of the n_hashes minima is a plain ``array_min(transform(hs, h ->
+    xxhash64(i, h)))`` over those longs — per shingle 1 string hash +
+    n_hashes fixed-8-byte long hashes.  Rejected: explode →
+    groupBy(doc_id) → n_hashes MIN aggs (re-shuffles rows that were
+    already grouped; 0.92 s even with the pre-hash) and one
+    ``aggregate`` HOF folding ``zip_with(acc, [xxhash64(i, s) for i],
+    least)`` (a fresh n_hashes array per SHINGLE inside the
+    interpreted fold; 1.43 s) against this shape's 1.09 s.
 
-    - explode → groupBy(doc_id) → n_hashes MIN aggs (the r9 shape):
-      shuffles every (doc_id, shingle) row to re-group rows that were
-      already grouped; 2.28 s, and 0.92 s even after the pre-hash.
-    - one ``aggregate`` HOF folding ``zip_with(acc, [xxhash64(i, s)
-      for i], least)``: no shuffle, but allocates a fresh n_hashes
-      array per SHINGLE inside the interpreted fold; 1.43 s.
-    - this shape with the pre-hash INLINED into the 32 minima: the
-      optimizer happily duplicates the non-collapsed transform, so the
-      string-hash pass runs n_hashes times — 11.6 s.  The TWO-STEP
-      projection is load-bearing: CollapseProject keeps the ``hs``
-      alias because a non-cheap expression referenced n_hashes times
-      is never inlined.  This shape: 1.09 s.
-
-    The per-seed lambdas are single-parameter closures built in a
-    helper — the tempting ``lambda h, i=i:`` two-parameter form
+    The per-seed lambdas are single-parameter closures built in
+    ``_seed_min`` — the tempting ``lambda h, i=i:`` two-parameter form
     silently binds i to transform's ELEMENT INDEX argument, seeding
     every hash identically (the r10 bug class that
     test_minhash_lsh_finds_near_duplicates caught).
@@ -237,43 +226,11 @@ def minhash_signatures(
     union, and every emitted pair is exact-string-verified, so the k2
     family's oracle-checked output is invariant to the hash family (a
     64-bit collision merges two shingles for CANDIDATE purposes only —
-    the same collision class prefix_candidates already accepts).
-
-    NULL-text docs do not participate (--nulls sweep): without the
-    filter, ``shingles(split(NULL))`` silently collapses to ``[""]``
-    (concat_ws skips NULL inputs), giving a contentless doc a REAL
-    signature that collides with every empty doc.
-    """
+    the same collision class prefix_candidates_from_base already
+    accepts)."""
 
     def _seed_min(hs: Column, i: int) -> Column:
         # single-param lambda: i is captured by the enclosing call
-        return F.array_min(F.transform(hs, lambda h: F.xxhash64(F.lit(i), h)))
-
-    docs = docs.filter(F.col(text_col).isNotNull())
-    sh_set = shingles(F.split(F.col(text_col), " "), shingle_k)
-    pre = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(sh_set, lambda s: F.xxhash64(s)).alias("hs"),
-    )
-    return pre.select(
-        "doc_id",
-        F.array(*[_seed_min(F.col("hs"), i) for i in range(n_hashes)]).alias(
-            "mh"
-        ),
-    )
-
-
-def minhash_signatures_from_base(
-    base: DataFrame, n_hashes: int = 32
-) -> DataFrame:
-    """:func:`minhash_signatures` over a :func:`shingle_base` relation:
-    identical mh values (same xxhash64(seed, xxhash64(shingle)) minima
-    over the same pre-hashed ``hs``), but the shingle+pre-hash pass is
-    read from the cached base instead of recomputed — and the
-    InMemoryRelation barrier replaces the two-step-projection
-    CollapseProject guard documented above."""
-
-    def _seed_min(hs: Column, i: int) -> Column:
         return F.array_min(F.transform(hs, lambda h: F.xxhash64(F.lit(i), h)))
 
     return base.select(
@@ -362,17 +319,14 @@ def lsh_candidate_pairs(
     )
 
 
-def prefix_candidates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    threshold: float = 0.5,
+def prefix_candidates_from_base(
+    base: DataFrame, threshold: float = 0.5, distinct: bool = True
 ) -> DataFrame:
     """DETERMINISTIC candidate pairs via the prefix filter (PPJoin
-    family, Xiao et al. 2008 — public): under any shared total order of
-    shingles, two sets with Jaccard >= t must share at least one
-    element of each other's (|X| - ceil(t*|X|) + 1)-element prefix.
+    family, Xiao et al. 2008 — public) over a :func:`shingle_base`
+    relation: under any shared total order of shingles, two sets with
+    Jaccard >= t must share at least one element of each other's
+    (|X| - ceil(t*|X|) + 1)-element prefix.
 
     This is the exact-recall complement to :func:`lsh_candidate_pairs`
     (fuzz sweep, seed 23): MinHash banding is PROBABILISTIC — a pair
@@ -383,54 +337,25 @@ def prefix_candidates(
     touch the SMALLEST posting lists.
 
     Shuffle discipline (r10): every relation past the explode carries
-    ``xxhash64(sh)`` instead of the ~25-char shingle string, so the df
-    window, both per-doc windows and the candidate self-join all move
-    8-byte longs (guide §2.3, narrower shuffle rows).  The hash is
-    engine-internal — candidates go to the exact string-array verify,
-    so the 64-bit collision class (same one k18/k14b already accept)
-    can only add a false candidate, never lose a true pair: merging
-    colliding shingles makes the hashed Jaccard an UPPER bound on the
-    true Jaccard, and the prefix theorem keeps exact recall under any
-    consistent total order.  The old shape also paid a full
-    ``.distinct()`` Exchange on (doc_id, sh) — a no-op, since
-    shingles() is array_distinct per doc — and a shingle-keyed
-    sh⋈freq join; the distinct is dropped and the join replaced by a
-    count window over the hash (one Exchange instead of agg+join).
-    Measured at sf0.1: 6.5 s → see OPTIMIZATION_r10.md."""
-    sh = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            shingles(F.split(F.col(text_col), " "), shingle_k)
-        ).alias("sh"),
-    )
-    # (doc_id, sh) is distinct by construction (array_distinct per doc)
-    sh = sh.select("doc_id", F.xxhash64("sh").alias("h"))
-    return _prefix_join(sh, threshold)
-
-
-def prefix_candidates_from_base(
-    base: DataFrame, threshold: float = 0.5, distinct: bool = True
-) -> DataFrame:
-    """:func:`prefix_candidates` over a :func:`shingle_base` relation:
-    exploding the cached per-element pre-hash array ``hs`` yields the
-    exact (doc_id, h) rows the standalone form computes (transform
-    preserves element order and multiplicity), without re-scanning and
-    re-shingling the corpus.
+    the base's 8-byte ``xxhash64(sh)`` pre-hash instead of the ~25-char
+    shingle string, so the df window, both per-doc windows and the
+    candidate self-join all move longs (guide §2.3, narrower shuffle
+    rows).  The hash is engine-internal — candidates go to the exact
+    string-array verify, so the 64-bit collision class (same one
+    k18/k14b already accept) can only add a false candidate, never
+    lose a true pair: merging colliding shingles makes the hashed
+    Jaccard an UPPER bound on the true Jaccard, and the prefix theorem
+    keeps exact recall under any consistent total order.  Document
+    frequency is a count window over the hash (one Exchange instead of
+    a shingle-keyed agg+join; measured at sf0.1, OPTIMIZATION_r10.md).
 
     ``distinct=False`` skips the trailing pair dedup Exchange — only
     for consumers that dedup downstream (verify_jaccard_from_base's
     kernel dedups consecutive sorted pairs; its fallback re-applies
     ``.distinct()``)."""
+    # (doc_id, h) is distinct up to 64-bit collisions: shingles() is
+    # array_distinct per doc
     sh = base.select("doc_id", F.explode("hs").alias("h"))
-    return _prefix_join(sh, threshold, distinct=distinct)
-
-
-def _prefix_join(
-    sh: DataFrame, threshold: float, distinct: bool = True
-) -> DataFrame:
-    """Shared prefix-filter + positional-filter candidate join over the
-    exploded (doc_id, h) shingle-hash relation (docstring: see
-    :func:`prefix_candidates`)."""
     w_freq = Window.partitionBy("h")
     w_doc = Window.partitionBy("doc_id").orderBy("df", "h")
     w_size = Window.partitionBy("doc_id")
@@ -490,36 +415,16 @@ def _prefix_join(
     return pairs.distinct() if distinct else pairs
 
 
-def verify_jaccard(
-    candidates: DataFrame,
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs; keep ≥ threshold.
-
-    NULL-text docs drop out (same convention as minhash_signatures) —
-    they can have no candidate pairs upstream, and an inner join on a
-    filtered side keeps the verify stage total."""
-    docs = docs.filter(F.col(text_col).isNotNull())
-    sets = docs.select(
-        F.col(id_col).alias("doc_id"),
-        shingles(F.split(F.col(text_col), " "), shingle_k).alias("sh_set"),
-    )
-    return _verify_join(candidates, sets, threshold)
-
-
 def verify_jaccard_from_base(
     candidates: DataFrame,
     base: DataFrame,
     threshold: float = 0.5,
     candidates_distinct: bool = True,
 ) -> DataFrame:
-    """:func:`verify_jaccard` over a :func:`shingle_base` relation: the
-    exact shingle arrays come from the cached base instead of a third
-    corpus scan.
+    """Exact shingle-set Jaccard for candidate pairs; keep ≥ threshold.
+    The shingle arrays come from the cached :func:`shingle_base`
+    relation (NULL-text docs are already gone there, so the inner joins
+    keep the stage total).
 
     r11 kernel prefilter (guide §4.2 — the k18 CSR pattern made a
     shared helper): at sf0.1 the t=0.5 prefix join emits ~309k
@@ -539,34 +444,21 @@ def verify_jaccard_from_base(
     j > t - 5e-7), so no true pair is pruned — the survivors (≈ the
     true pair count) then pay the exact STRING-array verify, keeping
     output values bit-identical to the unfiltered path.  Above the
-    byte/doc gate the prefilter is skipped and the exact verify runs
-    over all candidates, unchanged — the 100 TB path (the CSR is
-    corpus-sized there; k18's per-rep gate reasoning applies).
+    :func:`_csr_kernel_fits` gate the prefilter is skipped and the
+    exact verify runs over all candidates, unchanged — the 100 TB path
+    (the CSR is corpus-sized there).
 
     ``candidates_distinct=False`` declares that the incoming pair
     stream may carry duplicates: the kernel dedups consecutive pairs
-    after its (a)-keyed repartition+sort (identical pairs share ``a``
-    so they land in one partition, adjacent after the sort — k18's
-    exact pattern, with the batch-boundary carry), and the non-kernel
-    fallback applies ``.distinct()`` itself — either way the verify
-    output is duplicate-free exactly as if the caller had
-    distinct-ed."""
-    spark = base.sparkSession
-    n_docs, n_occ = base.select(
-        F.count(F.lit(1)), F.coalesce(F.sum(F.size("hs")), F.lit(0))
-    ).first()
-    # 4 B/uint32 occurrence + 8 B/int64 vocab entry + 1 B LUT (vocab <=
-    # occurrences, so 13x bounds all three) + 32 B/doc of ids/perm/
-    # indptr, x2 transient doubling during np.unique (k18's estimate)
-    csr_bytes = 2 * (13 * n_occ + 32 * n_docs)
-    if (
-        n_docs <= _VERIFY_KERNEL_MAX_DOCS
-        and csr_bytes <= _VERIFY_KERNEL_MAX_BYTES
-    ):
+    after its (a)-keyed repartition+sort, and the non-kernel fallback
+    applies ``.distinct()`` itself — either way the verify output is
+    duplicate-free exactly as if the caller had distinct-ed."""
+    docs_hs = base.select("doc_id", "hs")
+    if _csr_kernel_fits(docs_hs):
         stats = _pair_intersect_counts(
-            spark,
+            base.sparkSession,
             candidates,
-            base.select("doc_id", "hs"),
+            docs_hs,
             dedup=not candidates_distinct,
         )
         ih = F.col("inter").cast("double")
@@ -574,22 +466,61 @@ def verify_jaccard_from_base(
         surv = stats.filter(jh >= F.lit(threshold - 1e-6)).select("a", "b")
     else:
         surv = candidates if candidates_distinct else candidates.distinct()
-    return _verify_join(surv, base.select("doc_id", "sh_set"), threshold)
+    sets = base.select("doc_id", "sh_set")
+    a = sets.select(F.col("doc_id").alias("a"), F.col("sh_set").alias("sh_a"))
+    b = sets.select(F.col("doc_id").alias("b"), F.col("sh_set").alias("sh_b"))
+    joined = surv.join(a, "a").join(b, "b")
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    union = (F.size("sh_a") + F.size("sh_b") - F.size(F.array_intersect("sh_a", "sh_b"))).cast(
+        "double"
+    )
+    return (
+        joined.select("a", "b", F.round(inter / union, 6).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+#: CSR kernel gate (:func:`_csr_kernel_fits`): the (doc_id, hs) CSR is
+#: collected and broadcast only when its row count and estimated bytes
+#: fit these.  Driver memory scales with the hash footprint, not the
+#: row count (~60 MB at 50k k18 reps extrapolates to ~2.4 GB at 2M), so
+#: the byte ceiling is the binding one on long documents.
+_CSR_KERNEL_MAX_ROWS = 2_000_000
+_CSR_KERNEL_MAX_BYTES = 512 * 2**20
+
+
+def _csr_kernel_fits(docs_hs: DataFrame) -> bool:
+    """Size gate for :func:`_pair_intersect_counts` over ``docs_hs``
+    (doc_id, hs): ONE aggregate job measures what the kernel would
+    collect — its row count and hash occurrences — and the strategy is
+    chosen from that measured size, not from a user setting.  Shared by
+    verify_jaccard_from_base and k18_ngram_jaccard; reads the
+    module constants at call time, so tests force the fallback by
+    zeroing ``_CSR_KERNEL_MAX_ROWS``."""
+    n_rows, n_occ = docs_hs.select(
+        F.count(F.lit(1)), F.coalesce(F.sum(F.size("hs")), F.lit(0))
+    ).first()
+    # 4 B/uint32 occurrence + 8 B/int64 vocab entry + 1 B LUT (vocab <=
+    # occurrences, so 13x bounds all three) + 32 B/row of ids/perm/
+    # indptr, x2 transient doubling during np.unique/astype (r8 ADVICE:
+    # a 4x estimate undercounted peak memory by up to ~50%)
+    csr_bytes = 2 * (13 * n_occ + 32 * n_rows)
+    return n_rows <= _CSR_KERNEL_MAX_ROWS and csr_bytes <= _CSR_KERNEL_MAX_BYTES
 
 
 def _pair_intersect_counts(
     spark, pairs: DataFrame, docs_hs: DataFrame, dedup: bool = False
 ) -> DataFrame:
     """(a, b, inter, sza, szb) for each candidate pair, where ``inter``
-    counts b-side hash elements marked by a's LUT row — the k18 CSR
-    kernel as a shared helper: broadcast the corpus's pre-hashed
-    shingle CSR, stream pairs sorted by ``a``, build each ``a`` row's
-    boolean vocab LUT once and count every paired ``b`` row in one
-    ragged gather + reduceat (no per-row Python).  ``dedup=True`` drops
-    duplicate (a, b) pairs — they arrive consecutive after the sort —
-    so callers can skip a dedicated distinct Exchange (k18's pattern,
-    including the batch-boundary carry).  Caller gates on CSR bytes;
-    see :func:`verify_jaccard_from_base`."""
+    counts b-side hash elements marked by a's LUT row — the CSR kernel
+    shared by verify_jaccard_from_base and k18_ngram_jaccard: broadcast
+    the ``docs_hs`` (doc_id, hs) relation as a dense-id CSR, stream
+    pairs sorted by ``a``, build each ``a`` row's boolean vocab LUT once
+    and count every paired ``b`` row in one ragged gather + reduceat
+    (no per-row Python).  ``dedup=True`` drops duplicate (a, b) pairs —
+    they arrive consecutive after the sort — so callers can skip a
+    dedicated distinct Exchange.  Callers gate with
+    :func:`_csr_kernel_fits`."""
     import numpy as np
     import pandas as pd
 
@@ -617,6 +548,9 @@ def _pair_intersect_counts(
             a = pdf["a"].to_numpy()
             b = pdf["b"].to_numpy()
             if dedup:
+                # identical pairs share ``a``, so they land in one
+                # partition, adjacent after the sort; the carry catches
+                # a duplicate straddling an Arrow batch boundary
                 keep = np.r_[True, (a[1:] != a[:-1]) | (b[1:] != b[:-1])]
                 if prev_a is not None and a[0] == prev_a and b[0] == prev_b:
                     keep[0] = False
@@ -663,39 +597,10 @@ def _pair_intersect_counts(
     )
 
 
-def _verify_join(
-    candidates: DataFrame, sets: DataFrame, threshold: float
-) -> DataFrame:
-    """Shared exact-Jaccard verify join over per-doc shingle sets."""
-    a = sets.select(F.col("doc_id").alias("a"), F.col("sh_set").alias("sh_a"))
-    b = sets.select(F.col("doc_id").alias("b"), F.col("sh_set").alias("sh_b"))
-    joined = candidates.join(a, "a").join(b, "b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b") - F.size(F.array_intersect("sh_a", "sh_b"))).cast(
-        "double"
-    )
-    return (
-        joined.select("a", "b", F.round(inter / union, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 #: Driver union-find gate for dedup_clusters: symmetrized edge rows at
 #: or below this run on the driver (2M edges ≈ 32 MB of longs — well
 #: inside maxResultSize); above it the distributed min-label loop runs.
-_CC_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "2000000")
-)
-
-#: Verify-prefilter kernel gate (verify_jaccard_from_base): the shingle
-#: CSR is collected and broadcast only when the corpus fits these —
-#: same class as k18's _K18_KERNEL_MAX_* gates.
-_VERIFY_KERNEL_MAX_DOCS = int(
-    os.environ.get("SPARK_GRAFT_VERIFY_KERNEL_MAX_DOCS", "2000000")
-)
-_VERIFY_KERNEL_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_VERIFY_KERNEL_MAX_BYTES", str(512 * 1024**2))
-)
+_CC_DRIVER_MAX_EDGES = 2_000_000
 
 
 def _union_find_clusters(spark, edge_pairs) -> DataFrame:
@@ -783,9 +688,9 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 15) -> DataFrame:
     (known for free — the eager checkpoint already materialized it) is
     within ``_CC_DRIVER_MAX_EDGES``, resolve the components with a
     driver-side union-find instead: O(E α(E)) over ≤ a few-MB of longs
-    — the same bytes-gated driver-kernel class as k18's CSR verify
-    (gate env-tunable, distributed loop unchanged beyond the gate and
-    pinned equal by tests/test_vectors_dedup.py).  At 100 TB the pair
+    — the same size-gated driver-kernel class as the CSR verify
+    kernel (distributed loop unchanged beyond the gate and pinned equal
+    by tests/test_vectors_dedup.py).  At 100 TB the pair
     graph of a near-dup-dense corpus exceeds the gate and the loop
     runs exactly as before.
     """

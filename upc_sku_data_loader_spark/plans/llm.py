@@ -25,6 +25,8 @@ from ..functions.multimodal import (
     with_binary_payload,
 )
 from ..operators.dedup import (
+    _csr_kernel_fits,
+    _pair_intersect_counts,
     dedup_clusters,
     shingle_base,
     simhash,
@@ -809,19 +811,6 @@ def k17b_dedup_embedding_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- K18: character-n-gram Jaccard near-dup pairs ------------------------------
 
-#: Verify-strategy switch: at most this many REPRESENTATIVES (post
-#: exact-dup clustering, the thing actually collected) AND a CSR whose
-#: estimated broadcast footprint fits the byte ceiling → collect the rep
-#: gram sets into a broadcast CSR and count intersections in a numpy
-#: kernel; otherwise → plain keyed joins + array_intersect (tests pin
-#: both paths to identical output by monkeypatching the rep cap to 0).
-#: Driver memory scales with the gram footprint, not the doc count
-#: (~60 MB at 50k reps extrapolates to ~2.4 GB at 2M), so the gate is
-#: byte-based, not row-based.
-_K18_KERNEL_MAX_REPS = 2_000_000
-_K18_KERNEL_MAX_BYTES = 512 * 2**20
-
-
 # Canonical cache-ownership helper now lives in operators/dedup.py
 # (r10); kept under the old name for this module's many call sites.
 _unpersist_with = unpersist_with
@@ -1117,114 +1106,35 @@ def _k18_build(
     # exact verify on the surviving representative candidates.  Two
     # strategies, k17's broadcast→blocked auto-switch idiom:
     #
-    # small reps (≤2M): the candidate stream at adversarial dup density
+    # small reps: the candidate stream at adversarial dup density
     # (67.9M pairs at the 10× replica) must not drag a ~2.3 KB gram
     # array through pair-keyed joins — per-pair array_intersect alone
     # measured ~200 s there (it allocates the intersection array when
-    # only its SIZE is needed).  Instead the rep gram sets are packed
-    # once into a dense-id CSR (vocab is np.unique of the gram hashes)
-    # and broadcast (~60 MB at 50k reps); a mapInPandas kernel streams
-    # the 16-byte pairs sorted by `a`, builds a boolean vocab LUT per
-    # `a`-group, and counts hits for all its `b` rows in one ragged
-    # gather + reduceat (no per-row Python work — the k3 lesson).  Only
-    # integer intersect sizes come back; the jaccard division, the ≥t
-    # filter and the 6-dp round stay in Spark SQL so the arithmetic is
-    # bit-identical to the pure-SQL path below.
+    # only its SIZE is needed).  Instead the shared CSR kernel
+    # (operators/dedup._pair_intersect_counts, also the near-dup verify
+    # prefilter) packs the rep gram hashes once into a broadcast
+    # dense-id CSR (~60 MB at 50k reps), streams the 16-byte pairs
+    # sorted by `a`, and counts each `a`-group's `b` hits in one ragged
+    # gather + reduceat (no per-row Python work — the k3 lesson);
+    # dedup=True drops duplicate witnesses there instead of a 67.9M-row
+    # distinct shuffle.  Only integer intersect sizes come back; the
+    # jaccard division, the ≥t filter and the 6-dp round stay in Spark
+    # SQL so the arithmetic is bit-identical to the pure-SQL path below.
     #
     # large reps: the CSR outgrows a broadcast, fall back to plain
     # keyed joins + array_intersect (correct at any scale, just not the
     # fast path).
     #
-    # Gate on what is actually collected: the representative count and
-    # the CSR's estimated bytes (4 B/uint32 gram occurrence + ~32 B/rep
-    # of int64 ids/perm/indptr), NOT the raw doc count — at adversarial
-    # dup density reps << docs and the kernel stays cheap, while a
+    # The gate (operators/dedup._csr_kernel_fits) measures what is
+    # actually collected: the representative count and the CSR's
+    # estimated bytes, NOT the raw doc count — at adversarial dup
+    # density reps << docs and the kernel stays cheap, while a
     # long-document corpus can blow the broadcast well under any row
     # cap.  One aggregate job over the persisted clustered relation;
     # both strategies reuse the cache so nothing is computed twice.
-    n_reps, n_gram_occ = g.select(
-        F.count(F.lit(1)), F.coalesce(F.sum(F.size("grams")), F.lit(0))
-    ).first()
-    # 4 B/uint32 gram occurrence + 1 B/vocab-entry bool LUT per task
-    # (vocab <= gram occurrences, so 5x bounds both) + 32 B/rep of
-    # int64 ids/perm/indptr, then x2 for the transient doubling during
-    # np.unique/astype on the driver (r8 ADVICE: the old 4x estimate
-    # undercounted peak memory by up to ~50% near the ceiling)
-    csr_bytes = 2 * (5 * n_gram_occ + 32 * n_reps)
-    if n_reps <= _K18_KERNEL_MAX_REPS and csr_bytes <= _K18_KERNEL_MAX_BYTES:
-        import numpy as np
-        import pandas as pd
-
-        tbl = g.select("doc_id", "grams").toArrow()
-        doc_ids = tbl["doc_id"].to_numpy()
-        lists = tbl["grams"].combine_chunks()
-        flat = lists.flatten().to_numpy()
-        offsets = lists.offsets.to_numpy().astype(np.int64)
-        indptr = offsets - offsets[0]  # flatten() re-bases a sliced array
-        vocab, dense = np.unique(flat, return_inverse=True)
-        indices = dense.astype(np.uint32)
-        perm = np.argsort(doc_ids)
-        ids_sorted = doc_ids[perm]
-        bc = spark.sparkContext.broadcast(
-            (ids_sorted, perm.astype(np.int64), indptr, indices, len(vocab))
-        )
-
-        def intersect_sizes(batches):
-            ids_s, pm, ip, ind, nvocab = bc.value
-            lut = np.zeros(nvocab, dtype=bool)
-            prev_a = prev_b = None  # last pair of the previous batch
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                a = pdf["a"].to_numpy()
-                b = pdf["b"].to_numpy()
-                # input arrives sorted by (a, b) within the partition, so
-                # duplicate witnesses of a pair are consecutive; drop them
-                # here instead of a dedicated 67.9M-row distinct shuffle
-                keep = np.r_[True, (a[1:] != a[:-1]) | (b[1:] != b[:-1])]
-                if prev_a is not None and a[0] == prev_a and b[0] == prev_b:
-                    keep[0] = False
-                prev_a, prev_b = int(a[-1]), int(b[-1])
-                if not keep.all():
-                    a, b = a[keep], b[keep]
-                if not len(a):
-                    continue
-                ra = pm[np.searchsorted(ids_s, a)]
-                rb = pm[np.searchsorted(ids_s, b)]
-                inter = np.zeros(len(a), dtype=np.int64)
-                bounds = np.flatnonzero(np.r_[True, a[1:] != a[:-1], True])
-                for gi in range(len(bounds) - 1):
-                    s0, s1 = int(bounds[gi]), int(bounds[gi + 1])
-                    arow = ind[ip[ra[s0]] : ip[ra[s0] + 1]]
-                    lut[arow] = True
-                    rbs = rb[s0:s1]
-                    starts = ip[rbs]
-                    seg = ip[rbs + 1] - starts
-                    offs = np.cumsum(seg) - seg
-                    pos = (
-                        np.arange(int(seg.sum()), dtype=np.int64)
-                        - np.repeat(offs, seg)
-                        + np.repeat(starts, seg)
-                    )
-                    inter[s0:s1] = np.add.reduceat(lut[ind[pos]], offs)
-                    lut[arow] = False
-                yield pd.DataFrame(
-                    {
-                        "a": a,
-                        "b": b,
-                        "inter": inter,
-                        "sza": ip[ra + 1] - ip[ra],
-                        "szb": ip[rb + 1] - ip[rb],
-                    }
-                )
-
-        stats = (
-            cands.repartition(spark.sparkContext.defaultParallelism, "a")
-            .sortWithinPartitions("a", "b")
-            .mapInPandas(
-                intersect_sizes, "a long, b long, inter long, sza long, szb long"
-            )
-        )
+    reps_hs = g.select("doc_id", F.col("grams").alias("hs"))
+    if _csr_kernel_fits(reps_hs):
+        stats = _pair_intersect_counts(spark, cands, reps_hs, dedup=True)
         inter = F.col("inter").cast("double")
         union = (F.col("sza") + F.col("szb")).cast("double") - inter
         jac = inter / union

@@ -32,8 +32,6 @@ turn a cleaned document corpus into model-ready data:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -961,9 +959,7 @@ _PR_OFF = 1_000_000  # supplier node-id offset keeps the bipartite ids disjoint
 #: driver (2M edges ≈ 32 MB of int64 Arrow buffers); above it the
 #: distributed join loop runs — the same bytes-gated driver-kernel
 #: class as operators/dedup._CC_DRIVER_MAX_EDGES.
-_PR_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_PR_DRIVER_MAX_EDGES", "2000000")
-)
+_PR_DRIVER_MAX_EDGES = 2_000_000
 
 _PR_SCALE = 1_000_000_000_000  # fixed-point pico-rank units
 
@@ -1039,9 +1035,9 @@ def k43_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the count and the 3 unrolled iterations, and checkpointing
     truncates the deeply nested iteration plan (§3.3: planning time on
     a tree that re-expands the join per iteration) — and when the
-    SYMMETRIZED edge count fits ``_PR_DRIVER_MAX_EDGES`` (default 2M
-    edges ≈ 32 MB of int64 via Arrow, env-tunable) the fixed-point
-    power iteration runs as a numpy kernel on the driver: bincount
+    SYMMETRIZED edge count fits ``_PR_DRIVER_MAX_EDGES`` (2M edges ≈
+    32 MB of int64 via Arrow) the fixed-point power iteration runs as
+    a numpy kernel on the driver: bincount
     degrees, ``np.add.at`` integer mass sums, the same ``div``
     recurrences.  All values are non-negative so trunc-div (Spark),
     floor-div (numpy) and DuckDB ``//`` agree exactly; int64 cannot
